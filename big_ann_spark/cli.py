@@ -810,6 +810,16 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
+# build-index flag -> (refine tier, summary label, codes-only layout)
+_BUILD_TIERS = {
+    "sq8": ("sq8", "sq8 codes", True),
+    "sq8_refine": ("sq8", "sq8 + refine", False),
+    "pq_refine": ("pq", "pq + refine", False),
+    "binary_refine": ("binary", "binary + refine", False),
+    "opq_refine": ("opq", "opq + refine", False),
+}
+
+
 def _load_index_shards(
     spark,
     index: str,
@@ -818,19 +828,15 @@ def _load_index_shards(
     shard_ids: list[int] | None = None,
     shards_df=None,
 ):
-    """Read a build-index dir's shards, decoding SQ8 codes when present.
-    SQ8 auto-detect keys off the DATA ('codes' column present), not off
-    the sidecar file: a float rebuild into a dir that previously held an
-    --sq8 index overwrites shards/ but leaves the stale
-    sq8_ranges.parquet behind, and sidecar-keyed detection would then
-    reference a nonexistent codes column. The decode is a pure
-    projection placed above the pruned scan, so only probed shards
-    decode. ``shard_ids``: open only those shard directories by
-    explicit path (no full-layout listing walk — see
+    """Read a build-index dir's shards, decoding the SQ8 codes of a
+    codes-only layout (``operators.codecs.decode_codes_only``; the
+    decode is a projection above the pruned scan, so only probed
+    shards decode). ``shard_ids``: open only those shard directories
+    by explicit path (no full-layout listing walk — see
     ``ann.open_probed_shards``). ``shards_df``: a caller that already
     opened (and possibly mutation-resolved) the shard scan passes it
     here; only the decode projection is applied."""
-    from pyspark.sql import functions as F
+    from big_ann_spark.operators import codecs
 
     if shards_df is not None:
         shards = shards_df
@@ -840,29 +846,7 @@ def _load_index_shards(
         shards = open_probed_shards(spark, index, shard_ids)
     else:
         shards = spark.read.parquet(f"{index}/shards")
-    # decode ONLY codes-only layouts: a refine layout carries BOTH the
-    # codes and the raw vectors, and decoding there would silently
-    # replace the real embeddings with quantized midpoints (e.g. an
-    # `evaluate` run reporting recall of the quantization, not the
-    # index)
-    if "codes" in shards.columns and vec_col not in shards.columns:
-        rows = spark.read.parquet(f"{index}/sq8_ranges.parquet").collect()
-        if not rows:
-            raise SystemExit(
-                f"{index}: shards carry sq8 codes but sq8_ranges.parquet "
-                "is empty — rebuild the index"
-            )
-        rng = rows[0]
-        from big_ann_spark.operators import pq as PQ
-
-        shards = shards.select(
-            id_col,
-            "shard_id",
-            PQ.sq8_decode_col(
-                F.col("codes"), list(rng.mins), list(rng.maxs)
-            ).alias(vec_col),
-        )
-    return shards
+    return codecs.decode_codes_only(spark, index, shards, id_col, vec_col)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -897,89 +881,39 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     if args.cmd == "build-index":
+        from big_ann_spark.operators import codecs
         from big_ann_spark.operators import sharding as SH
 
         # pure-argparse validation BEFORE the (possibly hours-long at
         # scale) KMeans fit
-        if sum([args.sq8, args.sq8_refine, args.pq_refine,
-                args.binary_refine, args.opq_refine]) > 1:
+        chosen = [f for f in _BUILD_TIERS if getattr(args, f)]
+        if len(chosen) > 1:
             print(
                 "--sq8 / --sq8-refine / --pq-refine / --binary-refine / "
                 "--opq-refine are mutually exclusive",
                 file=sys.stderr,
             )
             return 2
+        tier, label, codes_only = _BUILD_TIERS[chosen[0]] if chosen else (
+            None, "", False
+        )
         emb = spark.read.parquet(args.src)
         assign, cents, _model = SH.kmeans_shard(
             emb, m=args.m, id_col=args.id_col, vec_col=args.vec_col
         )
-        if args.sq8:
-            from big_ann_spark.operators import pq as PQ
-
-            mins, maxs = PQ.train_sq8(emb, vec_col=args.vec_col)
-            coded = emb.select(
-                F.col(args.id_col),
-                PQ.sq8_encode_col(args.vec_col, mins, maxs).alias("codes"),
-            )
-            SH.write_sharded(
-                assign, coded, args.dst, id_col=args.id_col, vec_col="codes"
-            )
-            spark.createDataFrame(
-                [(mins, maxs)], "mins array<double>, maxs array<double>"
-            ).write.mode("overwrite").parquet(f"{args.dst}/sq8_ranges.parquet")
-        elif args.sq8_refine:
-            from big_ann_spark.operators import pq as PQ
-
-            SH.write_sharded(
-                assign, emb, args.dst, id_col=args.id_col, vec_col=args.vec_col,
-                sq8_ranges=PQ.train_sq8(emb, vec_col=args.vec_col),
-            )
-        elif args.pq_refine:
-            from big_ann_spark.operators import pq as PQ
-
-            dim = len(emb.select(args.vec_col).first()[0])
-            SH.write_sharded(
-                assign, emb, args.dst, id_col=args.id_col, vec_col=args.vec_col,
-                pq_codebooks=PQ.train_pq(
-                    emb, m=args.pq_m, k=args.pq_k, vec_col=args.vec_col, dim=dim
-                ),
-                pq_encode_impl="arrow",
-            )
-        elif args.binary_refine:
-            from big_ann_spark.operators import pq as PQ
-
-            SH.write_sharded(
-                assign, emb, args.dst, id_col=args.id_col, vec_col=args.vec_col,
-                binary_thresholds=PQ.train_binary(emb, vec_col=args.vec_col),
-            )
-        elif args.opq_refine:
-            from big_ann_spark.operators import pq as PQ
-
-            dim = len(emb.select(args.vec_col).first()[0])
-            # train_opq's default warm-starts from MLlib books (the
-            # trainer's random-pick init measured 3-5 recall pts BELOW
-            # a plain-PQ layout at 200k — SCALE.md r13)
-            R, books, _pmse, _omse = PQ.train_opq(
-                emb, m=args.pq_m, k=args.pq_k,
-                vec_col=args.vec_col, id_col=args.id_col, dim=dim,
-            )
-            SH.write_sharded(
-                assign, emb, args.dst, id_col=args.id_col, vec_col=args.vec_col,
-                pq_codebooks=books, opq_rotation=R, pq_encode_impl="arrow",
-            )
-        else:
-            SH.write_sharded(
-                assign, emb, args.dst, id_col=args.id_col, vec_col=args.vec_col
-            )
-        cents.write.mode("overwrite").parquet(f"{args.dst}/centroids.parquet")
-        tag = (
-            " (sq8 codes)" if args.sq8
-            else " (sq8 + refine)" if args.sq8_refine
-            else " (pq + refine)" if args.pq_refine
-            else " (binary + refine)" if args.binary_refine
-            else " (opq + refine)" if args.opq_refine
-            else ""
+        params = {} if tier is None else codecs.train(
+            emb, tier, vec_col=args.vec_col, id_col=args.id_col,
+            m=args.pq_m, k=args.pq_k,
         )
+        payload, vec_col = emb, args.vec_col
+        if codes_only:
+            payload, vec_col = codecs.codes_only(emb, args.id_col, args.vec_col, params)
+        SH.write_sharded(
+            assign, payload, args.dst, id_col=args.id_col, vec_col=vec_col,
+            pq_encode_impl="arrow", **params,
+        )
+        cents.write.mode("overwrite").parquet(f"{args.dst}/centroids.parquet")
+        tag = f" ({label})" if label else ""
         print(f"{emb.count()} vectors -> {args.m} shards at {args.dst}{tag}")
         return 0
 
@@ -1107,51 +1041,33 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "search":
         from big_ann_spark.operators import ann as ANN
+        from big_ann_spark.operators import codecs
         from big_ann_spark.operators import vector_ops as VO
 
         cents = spark.read.parquet(f"{args.index}/centroids.parquet")
         q = spark.read.parquet(args.queries).select(
             F.col(args.id_col).alias("qid"), F.col(args.vec_col).alias("qvec")
         )
-        # route first, then open ONLY the probed shard directories —
-        # a fresh CLI session skips the full-layout listing walk
-        routed = ANN.route_queries(q, cents, args.nprobe).localCheckpoint()
-        probe_ids = [
-            r["shard_id"] for r in routed.select("shard_id").distinct().collect()
-        ]
-        probed = ANN.open_probed_shards(spark, args.index, probe_ids)
-        # codec detection is SCHEMA-ONLY (zero jobs): code columns can
-        # only come from the base layout; the refine branches below
-        # resolve mutations inside ivf_search_from_disk, and the raw
-        # fallback builds the live view itself — never both
-        if "codes" in probed.columns and args.vec_col in probed.columns:
-            # --sq8-refine layout: quantized candidate scan (codes
-            # column only) + exact rerank from the raw column
+        # codec detection is SCHEMA-ONLY (zero jobs): a refine layout
+        # serves through its code-column candidate scan + exact rerank
+        # (resolving mutations inside ivf_search_from_disk); raw and
+        # codes-only layouts build the live view here — never both
+        codec = ANN.detect_refine_codec(spark, args.index, args.vec_col)
+        if codecs.is_refine(codec):
             out = ANN.ivf_search_from_disk(
                 q, args.index, cents, k=args.k, nprobe=args.nprobe,
                 id_col=args.id_col, vec_col=args.vec_col,
-                codec="sq8", pool_impl="arrow", as_of=args.as_of,
-            )
-        elif "pq_codes" in probed.columns and args.vec_col in probed.columns:
-            # --pq-refine / --opq-refine layout: ADC candidate scan
-            # (pq_codes column only, LUTs from rotated queries when the
-            # rotation sidecar exists) + exact rerank from the raw
-            # column; ONE detection rule lives in detect_refine_codec
-            pq_codec = ANN.detect_refine_codec(spark, args.index, args.vec_col)
-            out = ANN.ivf_search_from_disk(
-                q, args.index, cents, k=args.k, nprobe=args.nprobe,
-                id_col=args.id_col, vec_col=args.vec_col,
-                codec=pq_codec, pool_impl="arrow", as_of=args.as_of,
-            )
-        elif "bcodes" in probed.columns and args.vec_col in probed.columns:
-            # --binary-refine layout: Hamming candidate scan (bcodes
-            # only) + exact rerank from the raw column
-            out = ANN.ivf_search_from_disk(
-                q, args.index, cents, k=args.k, nprobe=args.nprobe,
-                id_col=args.id_col, vec_col=args.vec_col,
-                codec="binary", as_of=args.as_of,
+                codec=codec, pool_impl="arrow", as_of=args.as_of,
             )
         else:
+            # route first, then open ONLY the probed shard directories —
+            # a fresh CLI session skips the full-layout listing walk
+            routed = ANN.route_queries(q, cents, args.nprobe).localCheckpoint()
+            probe_ids = [
+                r["shard_id"]
+                for r in routed.select("shard_id").distinct().collect()
+            ]
+            probed = ANN.open_probed_shards(spark, args.index, probe_ids)
             live = VO.live_probed_view(
                 spark, args.index, probed, probe_ids, as_of=args.as_of,
                 id_col=args.id_col, vec_col=args.vec_col,

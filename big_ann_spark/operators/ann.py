@@ -22,10 +22,15 @@ searches only the top-1 shard); ``nprobe`` trades IO for recall.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from big_ann_spark.functions.vector import l2_distance
+from big_ann_spark.operators import codecs
 from big_ann_spark.operators.topk import top_k_per_group
 
 
@@ -42,9 +47,39 @@ def _isin_ids(col: str, ids: list) -> F.Column:
     return F.col(col).isin(ids)
 
 
-# (base path, base-dir mtime) -> shards StructType; see
-# open_probed_shards. Schema only — never data.
-_SHARDS_SCHEMA_MEMO: dict[tuple[str, int], object] = {}
+# (base path, base-dir mtime) -> shards StructType, least recently
+# used first; see open_probed_shards. Schema only — never data.
+_SHARDS_SCHEMA_MEMO: OrderedDict[tuple[str, int], object] = OrderedDict()
+_SHARDS_SCHEMA_MEMO_MAX = 256
+_SHARDS_SCHEMA_LOCK = threading.Lock()
+
+# one long-lived worker for ivf_search_from_disk's sidecar prefetch
+_SIDECAR_POOL = ThreadPoolExecutor(1, thread_name_prefix="ann-sidecars")
+
+
+def _memo_get(key):
+    with _SHARDS_SCHEMA_LOCK:
+        schema = _SHARDS_SCHEMA_MEMO.get(key)
+        if schema is not None:
+            _SHARDS_SCHEMA_MEMO.move_to_end(key)
+        return schema
+
+
+def _memo_schema(key, schema) -> None:
+    """Store ``schema`` under ``key``, evicting the least recently used
+    entries past the bound."""
+    with _SHARDS_SCHEMA_LOCK:
+        _SHARDS_SCHEMA_MEMO[key] = schema
+        _SHARDS_SCHEMA_MEMO.move_to_end(key)
+        while len(_SHARDS_SCHEMA_MEMO) > _SHARDS_SCHEMA_MEMO_MAX:
+            _SHARDS_SCHEMA_MEMO.popitem(last=False)
+
+
+def _memo_drop(base: str) -> None:
+    """Forget every memoized schema of the shards dir ``base``."""
+    with _SHARDS_SCHEMA_LOCK:
+        for key in [k for k in _SHARDS_SCHEMA_MEMO if k[0] == base]:
+            del _SHARDS_SCHEMA_MEMO[key]
 
 
 def open_probed_shards(
@@ -91,7 +126,7 @@ def open_probed_shards(
     memo_schema = None
     try:
         memo_key = (base, int(fs.getFileStatus(jpath).getModificationTime()))
-        memo_schema = _SHARDS_SCHEMA_MEMO.get(memo_key)
+        memo_schema = _memo_get(memo_key)
     except Exception:
         pass
     if not dirs:
@@ -110,44 +145,16 @@ def open_probed_shards(
         return reader.schema(memo_schema).parquet(*dirs)
     df = reader.parquet(*dirs)
     if memo_key is not None:
-        if len(_SHARDS_SCHEMA_MEMO) >= 256:  # bound growth across layouts
-            _SHARDS_SCHEMA_MEMO.clear()
-        _SHARDS_SCHEMA_MEMO[memo_key] = df.schema
+        _memo_schema(memo_key, df.schema)
     return df
 
 
 def detect_refine_codec(spark, path: str, vec_col: str = "embedding") -> str:
     """SCHEMA-ONLY refine-tier detection for a ``write_sharded``
-    layout (zero jobs): code columns can only come from the build, so
-    presence of codes/pq_codes/bcodes NEXT TO the raw column selects
-    the sq8/pq/binary candidate scan; anything else serves raw. Reads
-    the schema sidecar when present (works on empty layouts), else one
-    footer of the shards dir."""
-    from big_ann_spark.operators import oplayout
-
-    if oplayout.path_exists(spark, f"{path}/schema.parquet"):
-        cols = set(spark.read.parquet(f"{path}/schema.parquet").columns)
-    else:
-        cols = set(spark.read.parquet(f"{path}/shards").columns)
-    if vec_col in cols:
-        if "codes" in cols:
-            return "sq8"
-        if "pq_codes" in cols:
-            # OPQ layouts are PQ layouts whose codes live in a learned
-            # rotated space — one sidecar existence check (metadata)
-            # distinguishes them so serving reports the real tier
-            if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
-                return "opq"
-            return "pq"
-        if "bcodes" in cols:
-            return "binary"
-        return "raw"
-    if "codes" in cols:
-        # --sq8 codes-only layout: no raw column exists — callers that
-        # need exact distances must refuse rather than scan a column
-        # that is not there
-        return "codes_only"
-    return "raw"
+    layout (zero jobs): ``"raw"``, ``"sq8"``, ``"pq"``, ``"opq"``,
+    ``"binary"`` or ``"codes_only"`` — the rule lives in
+    ``operators.codecs.detect``."""
+    return codecs.detect(spark, path, vec_col)
 
 
 def ivf_search_from_disk(
@@ -201,111 +208,81 @@ def ivf_search_from_disk(
     the table, instead of paying one routing checkpoint per tier."""
     from big_ann_spark.operators.vector_ops import live_probed_view
 
+    codecs.check_codec(codec)
     spark = queries.sparkSession
-    # lazy checkpoint (r14, guide §2.6/§5): the distinct-id collect below
-    # is the first action and materializes it — one job where the eager
-    # form ran a serial checkpoint job first and the collect second
-    routed = (
-        _routed
-        if _routed is not None
-        else route_queries(
-            queries, centroids, nprobe, query_id=query_id, query_vec=query_vec, dim=dim
-        ).localCheckpoint(eager=False)
+    # sidecar prefetch (r15, VERDICT r14 #4, guide §2.6): the pq
+    # codebooks (+ optional OPQ rotation) have NO data dependency on
+    # routing, so they load on a background thread while the routing
+    # job runs; the values are identical, only the wall-clock
+    # interleaving changes
+    sidecar_fut = (
+        _SIDECAR_POOL.submit(codecs.load, spark, path, codec)
+        if codec in ("pq", "opq")
+        else None
     )
-    # one routing materialization (r14): the arrow pools and the pq
-    # fold LUT build need the routed ROWS on the driver anyway — when a
-    # pool will collect them, collect once here and derive probe_ids
-    # from the same rows instead of running a second serial job over
-    # the same contractually-tiny table
-    # sidecar prefetch (r15, VERDICT r14 #4, guide §2.6): the codebooks
-    # (+ optional OPQ rotation) live in layout sidecars with NO data
-    # dependency on routing, yet their read jobs ran serially AFTER the
-    # routing collect — the two from-disk search hops that CAN overlap.
-    # Load them on a background thread while the routing job runs; the
-    # values are identical, only the wall-clock interleaving changes.
-    sidecar_fut = None
-    if codec in ("pq", "opq"):
-        from concurrent.futures import ThreadPoolExecutor
-
-        from big_ann_spark.operators import oplayout as _ol2
-        from big_ann_spark.operators.pq import load_pq_codebooks, load_rotation
-
-        def _load_pq_sidecars():
-            cb = load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")
-            rot = None
-            if _ol2.path_exists(spark, f"{path}/opq_rotation.parquet"):
-                rot = load_rotation(spark, f"{path}/opq_rotation.parquet")
-            return cb, rot
-
-        _ex = ThreadPoolExecutor(1)
-        sidecar_fut = _ex.submit(_load_pq_sidecars)
-        _ex.shutdown(wait=False)
-    routed_rows = None
-    pool_needs_rows = (codec == "sq8" and pool_impl == "arrow") or codec in (
-        "pq",
-        "opq",
-    )
-    if pool_needs_rows:
-        routed_rows = routed.select("qid", "qvec", "shard_id").collect()
-        probe_ids = sorted({int(r["shard_id"]) for r in routed_rows})
-    else:
-        # plain collect + driver-side set: the table is contractually
-        # tiny (<= Q*nprobe rows), so a distinct() only added an
-        # exchange and its AQE stage micro-job to the serial chain (r15)
-        probe_ids = sorted(
-            {int(r["shard_id"]) for r in routed.select("shard_id").collect()}
+    try:
+        # lazy checkpoint (r14, guide §2.6/§5): the shard-id collect
+        # below is the first action and materializes it — one job
+        # where the eager form ran a serial checkpoint job first
+        routed = (
+            _routed
+            if _routed is not None
+            else route_queries(
+                queries, centroids, nprobe,
+                query_id=query_id, query_vec=query_vec, dim=dim,
+            ).localCheckpoint(eager=False)
         )
-    shards = live_probed_view(
-        spark, path, open_probed_shards(spark, path, probe_ids),
-        probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col,
-    )
-    if codec == "raw":
-        return ivf_search(
-            queries,
-            shards,
-            centroids,
-            k,
-            nprobe,
-            query_id=query_id,
-            query_vec=query_vec,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            _routed=routed,
-        )
-    if codec == "sq8":
-        pool = sq8_pool(
-            routed, shards, path, k * rerank_factor,
-            id_col=id_col, dim=dim, impl=pool_impl, ranges=_sq8_ranges,
-            routed_rows=routed_rows,
-        )
-    elif codec in ("pq", "opq"):
-        # OPQ is the PQ tier with codes in a LEARNED ROTATED space:
-        # pq_pool builds the per-query ADC LUTs from the rotated
-        # queries whenever the rotation sidecar is present (codec="pq"
-        # on an OPQ layout therefore serves correctly too); the exact
-        # rerank compares raw vectors — an orthogonal R preserves L2,
-        # so rotation never touches the rerank. codec="opq" makes the
-        # tier explicit and REFUSES a layout without the rotation
-        # (a plain-PQ layout served as "opq" would silently be plain PQ).
-        if codec == "opq" and sidecar_fut.result()[1] is None:
-            raise ValueError(
-                f"codec='opq' but {path} has no opq_rotation.parquet — "
-                "build with --opq-refine (write_sharded(opq_rotation=…)), "
-                "or serve as codec='pq'"
+        # one routing materialization (r14): the arrow pools and the pq
+        # fold LUT build need the routed ROWS on the driver anyway — when
+        # a pool will collect them, collect once here and derive
+        # probe_ids from the same rows. Otherwise a plain collect +
+        # driver-side set: the table is contractually tiny (<= Q*nprobe
+        # rows), so a distinct() only added an exchange and its AQE
+        # stage micro-job to the serial chain (r15)
+        routed_rows = None
+        if (codec == "sq8" and pool_impl == "arrow") or sidecar_fut is not None:
+            routed_rows = routed.select("qid", "qvec", "shard_id").collect()
+            probe_ids = sorted({int(r["shard_id"]) for r in routed_rows})
+        else:
+            probe_ids = sorted(
+                {int(r["shard_id"]) for r in routed.select("shard_id").collect()}
             )
-        pool = pq_pool(
-            routed, shards, path, k * rerank_factor,
-            id_col=id_col, impl=pool_impl, routed_rows=routed_rows,
-            _sidecars=sidecar_fut.result() if sidecar_fut is not None else None,
+        shards = live_probed_view(
+            spark, path, open_probed_shards(spark, path, probe_ids),
+            probe_ids, as_of=as_of, id_col=id_col, vec_col=vec_col,
         )
-    elif codec == "binary":
-        pool = binary_pool(routed, shards, path, k * rerank_factor, id_col=id_col)
-    else:
-        raise ValueError(
-            f"unknown codec {codec!r}; use 'raw', 'sq8', 'pq', 'opq' or "
-            "'binary'"
-        )
+        if codec == "raw":
+            return ivf_search(
+                queries, shards, centroids, k, nprobe,
+                query_id=query_id, query_vec=query_vec, id_col=id_col,
+                vec_col=vec_col, dim=dim, _routed=routed,
+            )
+        if codec == "sq8":
+            pool = sq8_pool(
+                routed, shards, path, k * rerank_factor,
+                id_col=id_col, dim=dim, impl=pool_impl, ranges=_sq8_ranges,
+                routed_rows=routed_rows,
+            )
+        elif codec == "binary":
+            pool = binary_pool(routed, shards, path, k * rerank_factor, id_col=id_col)
+        else:
+            # OPQ is the PQ tier with codes in a LEARNED ROTATED space:
+            # pq_pool builds the per-query ADC LUTs from the rotated
+            # queries whenever the rotation sidecar is present; the
+            # exact rerank compares raw vectors — an orthogonal R
+            # preserves L2, so rotation never touches the rerank.
+            # codec="opq" makes the tier explicit and REFUSES a layout
+            # without the rotation (codecs.load).
+            params = sidecar_fut.result()
+            pool = pq_pool(
+                routed, shards, path, k * rerank_factor,
+                id_col=id_col, impl=pool_impl, routed_rows=routed_rows,
+                _sidecars=(params["pq_codebooks"], params.get("opq_rotation")),
+            )
+    finally:
+        # no sidecar read outlives the call, even when routing failed
+        if sidecar_fut is not None and not sidecar_fut.cancel():
+            sidecar_fut.exception()
     # ONE pool materialization (r15): the pool is contractually tiny
     # (<= Q * k * rerank_factor rows — the same bound the cand-id
     # collect always relied on), so collect its (qid, neighbor_id)
@@ -365,33 +342,13 @@ def sq8_pool(
     (see ``_sq8_pool_arrow``; parity-tested) while the scan runs at
     memory bandwidth instead of interpreted-expression speed (measured
     ~6× on 2M×64, SCALE.md)."""
-    from big_ann_spark.operators import oplayout
-
-    spark = routed.sparkSession
-    if ranges is not None:
-        # caller already holds the layout's (mins, maxs) sidecar values
-        # (e.g. from the build it just ran, or a session-scoped layout
-        # cache) — skip the per-search one-row driver read (r14: one
-        # fewer serial job on the serving critical path)
-        mins, maxs = list(ranges[0]), list(ranges[1])
-    else:
-        ranges_path = f"{path}/sq8_ranges.parquet"
-        if not oplayout.path_exists(spark, ranges_path):
-            # layouts written before the sidecar rename (r9) used
-            # {path}/sq8.parquet — read them rather than forcing a
-            # rebuild. An existence check, not a bare except: a genuine
-            # read failure (permissions, corrupt footer) must surface
-            # as itself, not as a misleading not-found on the legacy
-            # name.
-            ranges_path = f"{path}/sq8.parquet"
-        # explicit schema (r14): write_sharded's sidecar schema — no
-        # footer inference job on the serving path
-        rng = (
-            spark.read.schema("mins array<double>, maxs array<double>")
-            .parquet(ranges_path)
-            .collect()[0]
-        )
-        mins, maxs = list(rng["mins"]), list(rng["maxs"])
+    # ``ranges``: the caller already holds the layout's (mins, maxs)
+    # sidecar values (e.g. from the build it just ran) — skip the
+    # per-search one-row driver read (r14: one fewer serial job on the
+    # serving critical path)
+    if ranges is None:
+        ranges = codecs.load(routed.sparkSession, path, "sq8")["sq8_ranges"]
+    mins, maxs = list(ranges[0]), list(ranges[1])
     if impl == "arrow":
         return _sq8_pool_arrow(
             routed, shards, mins, maxs, k_pool,
@@ -611,30 +568,21 @@ def pq_pool(
     per Arrow batch, accumulating left-to-right over j so emitted
     distances are BIT-EQUAL to the fold (parity-tested) while the scan
     runs at memory bandwidth — the sq8 arrow-pool pattern."""
-    from big_ann_spark.operators import oplayout
-    from big_ann_spark.operators.pq import (
-        load_pq_codebooks,
-        load_rotation,
-        pq_lut_rows,
-    )
+    from big_ann_spark.operators.pq import pq_lut_rows
 
     spark = routed.sparkSession
     # ``_sidecars``: (codebooks, rotation) already loaded by the caller
     # — ivf_search_from_disk prefetches them on a background thread
-    # concurrent with the routing collect (r15); values are identical
-    # to loading here.
+    # concurrent with the routing collect (r15). An OPQ layout's codes
+    # live in the rotated space, so the per-query LUTs are built from
+    # the ROTATED queries (the only place the rotation touches serving
+    # — the exact rerank compares raw vectors with raw queries, and an
+    # orthogonal R preserves L2 exactly)
     if _sidecars is not None:
         codebooks, rotation = _sidecars
     else:
-        codebooks = load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")
-        # OPQ layout: codes live in the rotated space, so the per-query
-        # LUTs are built from the ROTATED queries (the only place the
-        # rotation touches serving — the exact rerank compares raw
-        # vectors with raw queries, and an orthogonal R preserves L2
-        # exactly)
-        rotation = None
-        if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
-            rotation = load_rotation(spark, f"{path}/opq_rotation.parquet")
+        params = codecs.load(spark, path, "pq")
+        codebooks, rotation = params["pq_codebooks"], params.get("opq_rotation")
     if impl == "arrow":
         return _pq_pool_arrow(
             routed, shards, codebooks, k_pool, id_col=id_col,
@@ -706,14 +654,7 @@ def binary_pool(
         hamming_distance,
     )
 
-    spark = routed.sparkSession
-    # explicit schema (r14): write_sharded's sidecar schema — no footer
-    # inference job on the serving path
-    thr = list(
-        spark.read.schema("thresholds array<double>")
-        .parquet(f"{path}/binary_thresholds.parquet")
-        .collect()[0]["thresholds"]
-    )
+    thr = codecs.load(routed.sparkSession, path, "binary")["binary_thresholds"]
     qcodes = (
         routed.select("qid", "qvec")
         .dropDuplicates(["qid"])

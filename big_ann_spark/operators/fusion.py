@@ -91,22 +91,14 @@ def hybrid_search_from_disk(
         F.col(query_text).alias("qtext"),
     ).localCheckpoint()
     cents = spark.read.parquet(f"{vec_index}/centroids.parquet")
-    if codec is None:
-        # schema-only detection (ann.detect_refine_codec): a refine
-        # layout must serve through its code-column scan, not a silent
-        # full raw scan — and codes-only layouts have no raw column to
-        # scan at all
-        codec = ANN.detect_refine_codec(spark, vec_index)
-    if codec == "codes_only":
-        raise ValueError(
-            "hybrid_search_from_disk: the vector index stores SQ8 codes "
-            "only (no raw column) — build with --sq8-refine (or raw) so "
-            "the dense run can rerank exactly"
-        )
-    kw = {"pool_impl": "arrow"} if codec in ("sq8", "pq", "opq") else {}
+    # schema-only detection: a refine layout must serve through its
+    # code-column scan, not a silent full raw scan — and the search
+    # refuses a codes-only layout, which has no raw column to rerank.
+    # pool_impl only selects the sq8/pq pool kernel.
+    codec = codec or ANN.detect_refine_codec(spark, vec_index)
     dense = ANN.ivf_search_from_disk(
         q.select("qid", "qvec"), vec_index, cents,
-        k=depth, nprobe=nprobe, as_of=as_of, codec=codec, **kw,
+        k=depth, nprobe=nprobe, as_of=as_of, codec=codec, pool_impl="arrow",
     ).select("qid", "neighbor_id", "rank")
     lex = B.bm25_topk_from_disk(
         spark, bm25_index, q.select("qid", "qtext"),

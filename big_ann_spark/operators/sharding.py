@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_ann_spark.functions.vector import l2_distance
+from big_ann_spark.operators import codecs
 from big_ann_spark.operators.knn import median_pairwise_distance
 
 RANDOM_SEED = 505  # reference config_bigann_small.py:11
@@ -331,88 +332,26 @@ def write_sharded(
         if vec_col in assignments.columns
         else assignments.join(emb.select(id_col, vec_col), id_col)
     )
-    # sq8_ranges: (mins, maxs) from operators.pq.train_sq8 — adds an
-    # SQ8 `codes` column (array<smallint>; parquet dictionary-encodes
-    # the ≤256 distinct values to ~1 byte/dim on disk vs 4 for float32)
-    # next to the raw vectors and persists the ranges at
-    # {path}/sq8_ranges.parquet (the build-index --sq8 sidecar
-    # convention). A search then scans ONLY the codes column for
-    # candidate scoring (parquet column pruning = ~4× less IO on the
-    # dominant pass) and touches the raw column just for the top-k·rf
-    # rerank fetch. With codes present the in-file sort switches from
-    # dist to id_col so the rerank's bounded id-In pushdown gets
-    # parquet row-group/page skipping — point fetches instead of a
-    # probed-shard raw rescan.
-    if sq8_ranges is not None:
-        from big_ann_spark.operators.pq import sq8_encode_col
-
-        mins, maxs = sq8_ranges
-        with_vec = with_vec.withColumn(
-            "codes", sq8_encode_col(vec_col, mins, maxs).cast("array<smallint>")
+    # refine tiers (operators/codecs.py): each adds a compressed code
+    # column next to the raw vectors (parquet dictionary-encodes the
+    # tiny code alphabets) and persists its frozen quantizer as
+    # sidecars, deleting any other tier's stale sidecars. A search then
+    # scans ONLY the code column for candidate scoring (column pruning
+    # = 4-32x less IO on the dominant pass) and touches the raw column
+    # just for the top-k·rf rerank fetch. sq8 composes with pq (both
+    # code columns land; search picks by codec).
+    params = {
+        k: v
+        for k, v in (
+            ("sq8_ranges", sq8_ranges),
+            ("pq_codebooks", pq_codebooks),
+            ("opq_rotation", opq_rotation),
+            ("binary_thresholds", binary_thresholds),
         )
-        assignments.sparkSession.createDataFrame(
-            [([float(v) for v in mins], [float(v) for v in maxs])],
-            "mins array<double>, maxs array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/sq8_ranges.parquet")
-    # pq_codebooks: the IVFADC-with-refine layout — a `pq_codes` column
-    # (m sub-codes; parquet dictionary-encodes the tiny alphabet) next
-    # to the raw vectors, codebooks persisted as the sidecar. The
-    # candidate pass then scans pq_codes ONLY (~d·4/m× less IO than
-    # raw) and the rerank point-fetches raw rows, like SQ8 but one
-    # compression decade further. Composes with sq8_ranges (both code
-    # columns land; search picks by codec).
-    if pq_codebooks is not None:
-        from big_ann_spark.operators.pq import (
-            pq_encode_col,
-            save_pq_codebooks,
-            save_rotation,
-            with_pq_codes_arrow,
-        )
-
-        if opq_rotation is not None and pq_encode_impl != "arrow":
-            # no expression form exists for rotate-then-encode (d²
-            # multiply-adds per row is past the codegen budget)
-            raise ValueError("opq_rotation requires pq_encode_impl='arrow'")
-        if pq_encode_impl == "arrow":
-            # bulk-encode path: the expression tree's m·k structs
-            # measured 6× the rest of a 2M build; the numpy kernel is
-            # bit-equal (parity-tested) at memory bandwidth
-            with_vec = with_pq_codes_arrow(
-                with_vec, pq_codebooks, vec_col=vec_col, rotation=opq_rotation
-            )
-        elif pq_encode_impl == "fold":
-            with_vec = with_vec.withColumn(
-                "pq_codes",
-                pq_encode_col(vec_col, pq_codebooks).cast("array<smallint>"),
-            )
-        else:
-            raise ValueError(
-                f"pq_encode_impl must be 'fold' or 'arrow', got {pq_encode_impl!r}"
-            )
-        save_pq_codebooks(
-            assignments.sparkSession, f"{path}/pq_codebooks.parquet", pq_codebooks
-        )
-        if opq_rotation is not None:
-            save_rotation(
-                assignments.sparkSession,
-                f"{path}/opq_rotation.parquet",
-                opq_rotation,
-            )
-    # binary_thresholds (operators.pq.train_binary): the 32× tier —
-    # packed sign-bit `bcodes` next to the raw vectors; the candidate
-    # pass is an XOR+popcount Hamming scan of d-bit words.
-    if binary_thresholds is not None:
-        from big_ann_spark.operators.pq import binarize_col
-
-        with_vec = with_vec.withColumn(
-            "bcodes", binarize_col(vec_col, binary_thresholds)
-        )
-        assignments.sparkSession.createDataFrame(
-            [([float(t) for t in binary_thresholds],)],
-            "thresholds array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/binary_thresholds.parquet"
-        )
+        if v is not None
+    }
+    with_vec = codecs.encode(with_vec, vec_col, params, pq_encode_impl=pq_encode_impl)
+    codecs.save(assignments.sparkSession, path, params)
     if repartition_to:
         with_vec = with_vec.repartition(repartition_to, "shard_id")
     (
@@ -424,17 +363,11 @@ def write_sharded(
         # shard_id must lead the sort: the dynamic-partition writer
         # requires ordering by the partition column and would otherwise
         # insert its own non-stable sort, destroying the dist order.
-        # (With SQ8 codes: sort by id instead — rerank point fetches
-        # need id row-group stats; see the sq8_ranges comment above.)
+        # (With code columns: sort by id instead — the rerank's bounded
+        # id-In pushdown then gets parquet row-group/page skipping,
+        # point fetches instead of a probed-shard raw rescan.)
         .sortWithinPartitions(
-            "shard_id",
-            id_col
-            if (
-                sq8_ranges is not None
-                or pq_codebooks is not None
-                or binary_thresholds is not None
-            )
-            else "dist",
+            "shard_id", id_col if codecs.code_columns(params, vec_col) else "dist"
         )
         .write.partitionBy("shard_id")
         .mode("overwrite")
@@ -447,9 +380,7 @@ def write_sharded(
     # write_tag_postings_layout's _TAG_META_MEMO pop.
     from big_ann_spark.operators import ann as _ann
 
-    _shards_base = f"{path}/shards"
-    for _k in [k for k in _ann._SHARDS_SCHEMA_MEMO if k[0] == _shards_base]:
-        _ann._SHARDS_SCHEMA_MEMO.pop(_k, None)
+    _ann._memo_drop(f"{path}/shards")
     # schema sidecar: a PARTITIONED write of an EMPTY row set lands no
     # files at all (no partition values exist), which makes the shards
     # dir schema-uninferable — legal state when compaction folds a
@@ -492,12 +423,11 @@ def write_sharded(
         jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/shards")
         fs = jpath.getFileSystem(hconf)
         mtime = int(fs.getFileStatus(jpath).getModificationTime())
-        from big_ann_spark.operators import ann as _ann
-
-        _ann._SHARDS_SCHEMA_MEMO[(f"{path}/shards", mtime)] = (
+        _ann._memo_schema(
+            (f"{path}/shards", mtime),
             spark.read.option("basePath", f"{path}/shards")
             .parquet(f"{path}/shards")
-            .schema
+            .schema,
         )
     except Exception:
         pass

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from big_ann_spark.operators import oplayout
+from big_ann_spark.operators import codecs, oplayout
 
 OP_INSERT = "insert"
 OP_DELETE = "delete"
@@ -81,15 +81,6 @@ def uncommitted_vector_ops(spark, path: str) -> list[int]:
 
 def has_vector_ops(spark, path: str) -> bool:
     return oplayout.path_exists(spark, f"{path}/ops")
-
-
-def _has_sq8(spark, path: str) -> bool:
-    return oplayout.path_exists(spark, f"{path}/sq8_ranges.parquet")
-
-
-def _sq8_ranges(spark, path: str) -> tuple[list[float], list[float]]:
-    row = spark.read.parquet(f"{path}/sq8_ranges.parquet").collect()[0]
-    return list(row["mins"]), list(row["maxs"])
 
 
 def _land_vector_op(
@@ -159,8 +150,8 @@ def upsert_vectors(
     ``centroids.parquet`` written at build — upserts never move the
     centroids, exactly like adding to a trained IVF index; recall for
     upserted points is a property of that frozen routing). If the
-    layout carries SQ8 codes, the new vectors are encoded with the
-    frozen quantization ranges for the same reason. Duplicate ids
+    layout carries code columns, the new vectors are encoded under
+    its frozen quantizers for the same reason (``operators.codecs``). Duplicate ids
     WITHIN one batch collapse to a single arbitrary row
     (``dropDuplicates``) — between batches, the higher op id wins.
 
@@ -210,42 +201,8 @@ def upsert_vectors(
         F.col(vec_col).cast("array<float>").alias("embedding"),
         F.col("shard_id").cast("int").alias("shard_id"),
     )
-    if _has_sq8(spark, path):
-        from big_ann_spark.operators.pq import sq8_encode_col
-
-        mins, maxs = _sq8_ranges(spark, path)
-        rows = rows.withColumn(
-            "codes", sq8_encode_col("embedding", mins, maxs).cast("array<smallint>")
-        )
-    if oplayout.path_exists(spark, f"{path}/pq_codebooks.parquet"):
-        from big_ann_spark.operators.pq import (
-            load_pq_codebooks,
-            load_rotation,
-            pq_encode_col,
-            with_pq_codes_arrow,
-        )
-
-        books = load_pq_codebooks(spark, f"{path}/pq_codebooks.parquet")
-        if oplayout.path_exists(spark, f"{path}/opq_rotation.parquet"):
-            # OPQ: codes live in the rotated space — arrow kernel only
-            rows = with_pq_codes_arrow(
-                rows, books, vec_col="embedding",
-                rotation=load_rotation(spark, f"{path}/opq_rotation.parquet"),
-            )
-        else:
-            rows = rows.withColumn(
-                "pq_codes",
-                pq_encode_col("embedding", books).cast("array<smallint>"),
-            )
-    if oplayout.path_exists(spark, f"{path}/binary_thresholds.parquet"):
-        from big_ann_spark.operators.pq import binarize_col
-
-        thr = list(
-            spark.read.parquet(f"{path}/binary_thresholds.parquet").collect()[0][
-                "thresholds"
-            ]
-        )
-        rows = rows.withColumn("bcodes", binarize_col("embedding", thr))
+    # the layout's code columns, re-encoded under its frozen sidecars
+    rows = codecs.encode(rows, "embedding", codecs.load(spark, path))
     rows = rows.withColumn("op", F.lit(OP_INSERT))
     if tag_batch is not None:
         # the tag landing derives shard_of + df deltas from the rows
@@ -280,12 +237,7 @@ def delete_vectors(
         F.lit(None).cast("array<float>").alias("embedding"),
         F.lit(TOMBSTONE_SHARD).cast("int").alias("shard_id"),
     )
-    if _has_sq8(spark, path):
-        rows = rows.withColumn("codes", F.lit(None).cast("array<smallint>"))
-    if oplayout.path_exists(spark, f"{path}/pq_codebooks.parquet"):
-        rows = rows.withColumn("pq_codes", F.lit(None).cast("array<smallint>"))
-    if oplayout.path_exists(spark, f"{path}/binary_thresholds.parquet"):
-        rows = rows.withColumn("bcodes", F.lit(None).cast("array<bigint>"))
+    rows = codecs.with_null_codes(rows, codecs.layout_columns(spark, path))
     rows = rows.withColumn("op", F.lit(OP_DELETE))
     return _land_vector_op(spark, path, rows, op_id)
 
@@ -424,7 +376,7 @@ def compact_vector_layout(
     Works on refine layouts (raw vectors present → code columns are
     re-encoded under the frozen sidecars) AND codes-only ``--sq8``
     layouts (no raw column → the stored codes are carried as the
-    payload and the ranges sidecar is copied verbatim)."""
+    payload under the same frozen ranges)."""
     from big_ann_spark.operators.sharding import write_sharded
 
     base = spark.read.option("basePath", f"{src_path}/shards").parquet(
@@ -436,48 +388,13 @@ def compact_vector_layout(
     n_ops = len(
         oplayout.committed_ops(spark, src_path) & _ops_on_disk(spark, src_path)
     )
-    has_raw = vec_col in base.columns
-    payload = vec_col if has_raw else "codes"
+    payload = codecs.payload_column(base.columns, vec_col)
+    has_raw = payload == vec_col
     assignments = live.select(id_col, "shard_id", "dist", payload)
-    ranges = None
-    books = None
-    thr = None
-    if has_raw:
-        # refine layouts: re-encode code columns from the raw vectors
-        # under the frozen sidecars (deterministic — codes identical)
-        if _has_sq8(spark, src_path):
-            ranges = _sq8_ranges(spark, src_path)
-        if oplayout.path_exists(spark, f"{src_path}/pq_codebooks.parquet"):
-            from big_ann_spark.operators.pq import load_pq_codebooks
-
-            books = load_pq_codebooks(spark, f"{src_path}/pq_codebooks.parquet")
-        if oplayout.path_exists(spark, f"{src_path}/binary_thresholds.parquet"):
-            thr = list(
-                spark.read.parquet(
-                    f"{src_path}/binary_thresholds.parquet"
-                ).collect()[0]["thresholds"]
-            )
-    rot = None
-    if has_raw and oplayout.path_exists(spark, f"{src_path}/opq_rotation.parquet"):
-        from big_ann_spark.operators.pq import load_rotation
-
-        rot = load_rotation(spark, f"{src_path}/opq_rotation.parquet")
     write_sharded(
         assignments, assignments, dst_path,
-        id_col=id_col, vec_col=payload,
-        sq8_ranges=ranges, pq_codebooks=books, binary_thresholds=thr,
-        opq_rotation=rot,
-        pq_encode_impl="arrow" if rot is not None else "fold",
+        id_col=id_col, vec_col=payload, **codecs.load(spark, src_path),
     )
-    if not has_raw and _has_sq8(spark, src_path):
-        # codes-only layout: the codes ARE the payload; carry the
-        # ranges sidecar so decode keeps working on the new base
-        (
-            spark.read.parquet(f"{src_path}/sq8_ranges.parquet")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{dst_path}/sq8_ranges.parquet")
-        )
     (
         spark.read.parquet(f"{src_path}/centroids.parquet")
         .coalesce(1)

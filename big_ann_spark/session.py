@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config below is chosen for the 100 TB / 1000-executor target:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the number
+of cores in this process's CPU affinity) but every config below is
+chosen for the 100 TB / 1000-executor target:
 
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   and dynamic broadcast conversion replace hand-tuned partition counts.
@@ -15,6 +16,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on
+    (its CPU affinity, which a container's cpuset narrows below the
+    host's core count)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        return cpus
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no sched_getaffinity on this platform
+        return str(os.cpu_count() or 1)
 
 
 def _default_driver_mem() -> str:
@@ -37,7 +51,7 @@ def get_spark(app_name: str = "big-ann-spark", *, shuffle_partitions: int | None
     At cluster scale, master/memory come from spark-submit; only set a
     local master when none is configured.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -74,7 +88,7 @@ def get_spark(app_name: str = "big-ann-spark", *, shuffle_partitions: int | None
     )
     if not os.environ.get("SPARK_MASTER") and "SPARK_ENV_LOADED" not in os.environ:
         builder = builder.master(f"local[{cpus}]")
-        # local mode = ONE JVM doing driver + all 32 executor threads;
+        # local mode = ONE JVM doing driver + all executor threads;
         # Java's default heap (1 GiB) OOMs the first ≥64 MiB broadcast
         # build at 10× data (measured: grouped_joins at /tmp/sf1x).
         # Cluster deployments size this via spark-submit instead.
@@ -123,7 +137,7 @@ def prepare_foreign_session(spark: SparkSession) -> None:
         _eu._enable_debugging_cache = False
     except Exception:
         pass
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     wanted = {
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.adaptive.enabled": "true",

@@ -426,6 +426,7 @@ def export_vector_index(
     head.
     Returns the exported row count."""
     from big_ann_spark.functions.vector import l2_distance
+    from big_ann_spark.operators import codecs
     from big_ann_spark.operators.sharding import write_sharded
 
     live = live_vectors(spark, src_path, as_of=as_of)
@@ -440,48 +441,8 @@ def export_vector_index(
         .localCheckpoint()  # count + sidecar training + write share it
     )
     n = rows.count()
-    ranges = books = thr = rotation = None
-    if codec == "sq8":
-        from big_ann_spark.operators.pq import train_sq8
-
-        ranges = train_sq8(rows)
-    elif codec in ("pq", "opq"):
-        if n == 0:
-            raise ValueError(
-                f"export_vector_index: cannot train codec={codec!r} on an "
-                "EMPTY live view (every vector deleted?) — export without "
-                "a codec, or export a snapshot (as_of) that has rows"
-            )
-        dim = len(rows.select("embedding").first()[0]) if n else 0
-        # largest m ≤ 8 dividing dim: PQ subspaces must tile the vector
-        sub_m = next(m for m in (8, 4, 2, 1) if dim % m == 0)
-        if codec == "pq":
-            from big_ann_spark.operators.pq import train_pq
-
-            books = train_pq(rows, dim=dim, m=sub_m)
-        else:
-            from big_ann_spark.operators.pq import train_opq
-
-            rotation, books, _pmse, _omse = train_opq(
-                rows, dim=dim, m=sub_m
-            )
-    elif codec == "binary":
-        from big_ann_spark.operators.pq import train_binary
-
-        thr = train_binary(rows)
-    elif codec is not None:
-        raise ValueError(
-            f"unknown codec {codec!r}; use 'sq8', 'pq', 'opq', 'binary' "
-            "or None"
-        )
-    write_sharded(
-        rows, rows, dst_path,
-        sq8_ranges=ranges,
-        pq_codebooks=books,
-        opq_rotation=rotation,
-        pq_encode_impl="arrow" if books is not None else "fold",
-        binary_thresholds=thr,
-    )
+    params = {} if codec is None else codecs.train(rows, codec)
+    write_sharded(rows, rows, dst_path, pq_encode_impl="arrow", **params)
     (
         centroids.coalesce(1)
         .write.mode("overwrite")

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_ann_spark.catalog import load_table
@@ -93,6 +94,7 @@ def test_cli_build_index_and_search(spark, sf_dir, tmp_path):
     assert any(d.startswith("shard_id=") for d in os.listdir(f"{idx}/shards"))
 
 
+@pytest.mark.slow
 def test_cli_build_graph_and_search(spark, sf_dir, tmp_path):
     """Graph-tier lifecycle as two CLI calls: build-graph (NN-Descent
     edges -> parquet) then graph-search from the landed edge list;
@@ -118,6 +120,7 @@ def test_cli_build_graph_and_search(spark, sf_dir, tmp_path):
     assert main(["graph-search", gdir, src, "--k", "5"]) == 2
 
 
+@pytest.mark.slow
 def test_cli_graph_serving_layout_from_disk(spark, sf_dir, tmp_path):
     """--serving-layout persists the graph TIER (node records: vector +
     adjacency in one bucketed row — the on-disk-HNSW analog of
@@ -182,24 +185,45 @@ def test_cli_build_index_sq8_and_search(spark, sf_dir, tmp_path):
 
 def test_cli_float_rebuild_over_sq8_index(spark, sf_dir, tmp_path):
     """ADVICE r6: a float rebuild into a dir that previously held an
-    --sq8 index overwrites shards/ but leaves the stale
-    sq8_ranges.parquet sidecar behind — search must key detection off
-    the DATA (codes column), so the rebuilt float index searches fine
-    despite the stale sidecar."""
+    --sq8 index overwrites shards/ and deletes the stale
+    sq8_ranges.parquet sidecar; the rebuilt float index searches
+    fine."""
     from big_ann_spark.cli import main
 
     src = f"{sf_dir}/embeddings.parquet"
     idx = str(tmp_path / "idx_rebuilt")
     assert main(["build-index", src, idx, "--m", "5", "--sq8"]) == 0
     assert main(["build-index", src, idx, "--m", "5"]) == 0  # float rebuild
-    import os
-
-    assert os.path.exists(f"{idx}/sq8_ranges.parquet")  # stale sidecar survives
+    assert not os.path.exists(f"{idx}/sq8_ranges.parquet")  # stale sidecar gone
     assert "codes" not in spark.read.parquet(f"{idx}/shards").columns
     out = str(tmp_path / "res.parquet")
     assert main(["search", idx, src, "--k", "5", "--nprobe", "2", "--out", out]) == 0
     n_q = load_table(spark, sf_dir, "embeddings").count()
     assert spark.read.parquet(out).count() == 5 * n_q
+
+
+def test_compaction_after_float_rebuild_over_sq8_stays_raw(spark, sf_dir, tmp_path):
+    """A float rebuild over an --sq8 index, then deletes and an
+    in-place compaction: the compacted layout must stay raw. Writers
+    take the tier from the layout's columns, never from a leftover
+    sidecar — otherwise compaction re-encodes a `codes` column under
+    the stale ranges and the layout turns into an sq8 one."""
+    from big_ann_spark.cli import main
+    from big_ann_spark.operators import vector_ops as VO
+
+    src = f"{sf_dir}/embeddings.parquet"
+    idx = str(tmp_path / "idx")
+    assert main(["build-index", src, idx, "--m", "5", "--sq8"]) == 0
+    assert main(["build-index", src, idx, "--m", "5"]) == 0  # float rebuild
+    assert ANN.detect_refine_codec(spark, idx) == "raw"
+    VO.delete_vectors(spark, idx, [0, 1])
+    assert VO.compact_in_place(spark, idx) == 1
+    shards = spark.read.parquet(f"{idx}/shards")
+    assert "codes" not in shards.columns
+    assert ANN.detect_refine_codec(spark, idx) == "raw"
+    ids = {r["vec_id"] for r in shards.select("vec_id").collect()}
+    n = spark.read.parquet(src).count()
+    assert len(ids) == n - 2 and not ids & {0, 1}
 
 
 def test_gt_round_trip_and_cli_evaluate(spark, sf_dir, tmp_path):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_ann_spark.catalog import load_table
@@ -171,6 +172,7 @@ def _opq_layout(spark, sf_dir):
     return got
 
 
+@pytest.mark.slow
 def test_opq_from_disk_exhaustive_pool_equals_exact(spark, sf_dir):
     """End-to-end rotation invariance: with an exhaustive pool, the
     OPQ path's exact rerank (raw vectors, unrotated queries) must
@@ -240,6 +242,49 @@ def test_opq_pool_impls_agree_and_mutations_compose(spark, sf_dir):
     _CACHE.pop(sf_dir + ":opq")
 
 
+def test_pq_rebuild_over_opq_layout_drops_rotation(spark, sf_dir):
+    """A plain-PQ rebuild where an OPQ layout stood must not keep the
+    old rotation: the build deletes opq_rotation.parquet, the layout
+    is detected as pq, and an upsert encodes under the new codebooks
+    alone (a stale rotation would also skew every ADC lookup table)."""
+    import os
+
+    import numpy as np
+
+    from big_ann_spark.operators import vector_ops as VO
+    from big_ann_spark.operators.pq import with_pq_codes_arrow
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cents = SH.label_centroids(load_table(spark, sf_dir, "embeddings"))
+    assign = SH.assign_to_centroids(emb, cents, extra_cols=["embedding"])
+    books = train_pq(emb, m=8, k=16)
+    dim = len(books) * len(books[0][0])
+    R = np.linalg.qr(np.random.default_rng(0).normal(size=(dim, dim)))[0]
+    path = tempfile.mkdtemp(prefix="big_ann_opq_rebuild_") + "/layout"
+    SH.write_sharded(
+        assign, emb, path,
+        pq_codebooks=books, opq_rotation=R.tolist(), pq_encode_impl="arrow",
+    )
+    assert ANN.detect_refine_codec(spark, path) == "opq"
+    SH.write_sharded(assign, emb, path, pq_codebooks=books, pq_encode_impl="arrow")
+    cents.write.mode("overwrite").parquet(f"{path}/centroids.parquet")
+    assert ANN.detect_refine_codec(spark, path) == "pq"
+    assert not os.path.exists(f"{path}/opq_rotation.parquet")
+
+    new = emb.filter(F.col("vec_id") < 3)
+    VO.upsert_vectors(spark, path, new)
+    got = {
+        r["vec_id"]: list(r["pq_codes"])
+        for r in spark.read.parquet(f"{path}/ops").filter("op = 'insert'").collect()
+    }
+    want = {
+        r["vec_id"]: list(r["pq_codes"])
+        for r in with_pq_codes_arrow(new, books).collect()
+    }
+    assert got == want and len(got) == 3
+
+
+@pytest.mark.slow
 def test_cli_build_opq_refine_and_search(spark, sf_dir, tmp_path):
     from big_ann_spark.cli import main
 

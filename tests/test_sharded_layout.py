@@ -58,3 +58,27 @@ def test_write_sharded_prepopulates_schema_memo(spark, sf_dir):
     # and the serving-path open agrees with a bare read on those dirs
     probed = ANN.open_probed_shards(spark, path, [0, 1])
     assert probed.schema == inferred
+
+
+def test_tier_detection_runs_no_spark_job(spark, sf_dir):
+    """Writers take a layout's tier from its columns on every upsert and
+    delete, so the column read must stay a footer read of the schema
+    sidecar: detecting the tier and loading its (here: no) sidecars
+    launches no Spark job."""
+    from big_ann_spark.operators import ann as ANN
+    from big_ann_spark.operators import codecs
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = SH.label_centroids(emb)
+    assign = SH.assign_to_centroids(emb, cents)
+    path = tempfile.mkdtemp(prefix="big_ann_detect_") + "/layout"
+    SH.write_sharded(assign, emb, path)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("tier-detection", "tier detection")
+    try:
+        assert ANN.detect_refine_codec(spark, path) == "raw"
+        assert codecs.load(spark, path) == {}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("tier-detection")) == []

@@ -81,7 +81,11 @@ def _runbook(spark, emb, path):
     }
 
 
-@pytest.mark.parametrize("codec", ["raw", "sq8", "pq"])
+@pytest.mark.parametrize(
+    "codec",
+    ["raw", pytest.param("sq8", marks=pytest.mark.slow),
+     pytest.param("pq", marks=pytest.mark.slow)],
+)
 def test_runbook_equals_rebuild_at_every_as_of(spark, sf_dir, codec):
     emb, cents, path = _build_layout(
         spark, sf_dir, sq8=codec == "sq8", pq=codec == "pq"
@@ -178,6 +182,7 @@ def test_pristine_layout_short_circuits(spark, sf_dir):
     assert VO.live_probed_view(spark, path, base, [0, 1]) is base
 
 
+@pytest.mark.slow
 def test_cli_mutation_lifecycle(spark, sf_dir, tmp_path):
     """build-index → index-upsert → index-delete → search (head and
     --as-of) → index-compact → search: the full CLI lifecycle, with
